@@ -107,6 +107,38 @@ def phrase(ix: BruteIndex, query: str, boost: float = 1.0) -> Dict[int, float]:
     return out
 
 
+def sloppy_phrase(ix: BruteIndex, query: str, slop: int,
+                  boost: float = 1.0) -> Dict[int, float]:
+    """slop > 0 phrase, doc at a time. The phrase frequency is Lucene's
+    SloppyPhraseMatcher walk over each doc's offset-adjusted positions —
+    the per-doc reference walk (bm25._lucene_sloppy_walk[_rpt]) that the
+    engine's vectorized form is property-tested against."""
+    from opensearch_spark.search.bm25 import (
+        _lucene_sloppy_walk, _lucene_sloppy_walk_rpt, _repeat_groups,
+    )
+
+    terms = tokenize(query)
+    if not terms or any(t not in ix.df for t in terms):
+        return {}
+    if len(terms) == 1:
+        return match(ix, query, boost=boost)
+    rpt = _repeat_groups(terms)
+    isum = sum(idf(ix, t) for t in terms)
+    out: Dict[int, float] = {}
+    for d in ix.all_doc_ids:
+        toks = ix.tokens[d]
+        pls = [[p - off for p, tok in enumerate(toks) if tok == t]
+               for off, t in enumerate(terms)]
+        if not all(pls):
+            continue
+        pf = (_lucene_sloppy_walk_rpt(pls, slop, rpt) if rpt
+              else _lucene_sloppy_walk(pls, slop))
+        if pf > 0:
+            dl = ix.dl_q[d]
+            out[d] = boost * isum * (K1 + 1.0) * pf / (pf + K1 * (1 - B + B * dl / ix.avgdl))
+    return out
+
+
 def bool_query(
     ix: BruteIndex,
     must: Sequence[Dict[int, float]] = (),

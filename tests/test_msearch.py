@@ -129,3 +129,109 @@ def test_search_hot_query_plan_cache(eng):
         eng._load_deletes()
         eng._search_plans.clear()
         eng._msearch_plans.clear()
+
+
+# ---- differential: every serving path against the brute oracle -------------
+
+from hypothesis import given, settings, strategies as st  # noqa: E402
+
+from opensearch_spark.search import dsl as dsl_mod  # noqa: E402
+from opensearch_spark.testing import brute  # noqa: E402
+
+_TERMS = ["def", "return", "import", "class", "self", "yield", "public",
+          "static", "void", "data", "load", "parse", "zzz_not_a_term"]
+_PHRASES = ["def main", "public static", "return self", "static void",
+            "for i in range", "import numpy", "def zzz_not_a_term", "return"]
+
+
+@st.composite
+def _match_leaf(draw):
+    spec = {"query": " ".join(draw(st.lists(st.sampled_from(_TERMS),
+                                            min_size=1, max_size=3))),
+            "boost": draw(st.sampled_from([1.0, 2.0]))}
+    mode = draw(st.sampled_from(["or", "and", "msm"]))
+    if mode == "and":
+        spec["operator"] = "and"
+    elif mode == "msm":
+        spec["minimum_should_match"] = 2
+    return {"match": {"content": spec}}
+
+
+@st.composite
+def _phrase_leaf(draw):
+    return {"match_phrase": {"content": {
+        "query": draw(st.sampled_from(_PHRASES)),
+        "slop": draw(st.sampled_from([0, 1])),
+        "boost": draw(st.sampled_from([1.0, 2.0])),
+    }}}
+
+
+_LEAF = st.one_of(_match_leaf(), _phrase_leaf())
+
+
+@st.composite
+def _query(draw):
+    if draw(st.booleans()):
+        return draw(_LEAF)
+    body = {occ: draw(st.lists(_LEAF, max_size=n))
+            for occ, n in (("must", 2), ("filter", 1), ("should", 3),
+                           ("must_not", 1))}
+    if not (body["must"] or body["filter"] or body["should"]):
+        body["should"] = [draw(_LEAF)]
+    body = {occ: cs for occ, cs in body.items() if cs}
+    msm = draw(st.sampled_from([None, 1, 2]))
+    if msm is not None:
+        body["minimum_should_match"] = msm
+    return {"bool": body}
+
+
+def _oracle(bix, q):
+    if "bool" in q:
+        b = q["bool"]
+        return brute.bool_query(
+            bix, must=[_oracle(bix, c) for c in b.get("must", [])],
+            filt=[_oracle(bix, c) for c in b.get("filter", [])],
+            should=[_oracle(bix, c) for c in b.get("should", [])],
+            must_not=[_oracle(bix, c) for c in b.get("must_not", [])],
+            msm=b.get("minimum_should_match"),
+        )
+    if "match" in q:
+        s = q["match"]["content"]
+        return brute.match(bix, s["query"], s.get("operator", "or"),
+                           s.get("minimum_should_match", 0), s["boost"])
+    s = q["match_phrase"]["content"]
+    if s["slop"]:
+        return brute.sloppy_phrase(bix, s["query"], s["slop"], s["boost"])
+    return brute.phrase(bix, s["query"], s["boost"])
+
+
+@pytest.fixture(scope="module")
+def brute_ix(eng):
+    rows = eng.corpus.select("docId", "content").collect()
+    return brute.build_from_texts({int(r["docId"]): r["content"] for r in rows})
+
+
+def _pairs(rows):
+    return [(int(r["docId"]), float(r["score"])) for r in rows]
+
+
+@settings(max_examples=25, derandomize=True, deadline=None, database=None)
+@given(queries=st.lists(_query(), min_size=1, max_size=2))
+def test_serving_paths_match_oracle(eng, brute_ix, queries):
+    """search(k), compile() top-k, msearch per-qid rows and count() all
+    agree with the brute-force oracle on generated match / phrase / bool
+    queries (ties broken by docId, scores within 1e-6)."""
+    by_qid = {}
+    for r in eng.msearch(queries, k=K).collect():
+        by_qid.setdefault(int(r["qid"]), []).append(r)
+    for qid, q in enumerate(queries):
+        scores = _oracle(brute_ix, q)
+        want = brute.topk(scores, K)
+        got = _pairs(eng.search(q, k=K).collect())
+        assert brute.rank_identical(got, want, 1e-6), (q, got, want)
+        top = (eng.compile(dsl_mod.parse(q))
+               .orderBy(F.desc("score"), F.asc("docId")).limit(K))
+        assert brute.rank_identical(_pairs(top.collect()), want, 1e-6), q
+        assert brute.rank_identical(_pairs(by_qid.get(qid, [])), want, 1e-6), q
+        assert eng.count(q) == len(scores), q
+
