@@ -21,7 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 import opensearch_spark.oracle_ft as O
-from opensearch_spark.analysis.analyzer import duckdb_tokens_expr
+from opensearch_spark.analysis.analyzer import MAX_TOKEN_LENGTH, duckdb_tokens_expr
 from opensearch_spark.index.build import build_index
 from opensearch_spark.pipelines import dedup as _dd, multimodal as _mm, similarity as _sim
 from opensearch_spark.pipelines import sampling as _smp
@@ -185,7 +185,8 @@ def _saty_shingle_expr(n: int, toks: str = "_toks") -> str:
                       for j in range(n))
     return (f"CASE WHEN size({toks}) >= {n} THEN array_join(filter("
             f"transform(sequence(1, size({toks}) - {n - 1}), "
-            f"i -> concat_ws('_', {grams})), g -> length(g) <= 255), ' ') "
+            f"i -> concat_ws('_', {grams})), "
+            f"g -> length(g) <= {MAX_TOKEN_LENGTH}), ' ') "
             f"ELSE '' END")
 
 
@@ -790,7 +791,7 @@ def _ft_analyze_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     segment tasks run), checked against the oracle's tok CTE — the
     analyzer contract certified directly instead of only through
     scores. First 50 docs keep the row count bounded."""
-    from opensearch_spark.analysis.analyzer import duckdb_tokens_expr
+    from opensearch_spark.analysis.analyzer import MAX_TOKEN_LENGTH, duckdb_tokens_expr
     import duckdb
     import pyarrow as pa
 

@@ -96,7 +96,7 @@ def main() -> None:
         for _ in range(repeats):
             # cold-plan latency (comparable across rounds): bust the
             # hot-query plan cache so every run pays planning + scoring
-            eng._search_plans.clear()
+            eng._plan_cache.clear()
             t = time.perf_counter()
             eng.search(dsl, k=10).collect()
             times.append(time.perf_counter() - t)

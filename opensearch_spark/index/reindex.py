@@ -194,9 +194,7 @@ def update_by_query(
             os.path.join(index_dir, "deletes"))
     # poison the stale engine's caches so accidental reuse fails loudly
     # on the next file read instead of silently serving stale plans
-    engine._search_plans.clear()
-    engine._msearch_plans.clear()
-    engine._term_df_map = None
+    engine._invalidate_caches()
     # allowMissingColumns: a script may ADD a source field (ctx._source
     # mutation of a new name, or a new raw column) — untouched docs get
     # NULL for it, matching the reference's sparse-source semantics

@@ -22,7 +22,7 @@ vectorized numpy; no per-row Python.
 from __future__ import annotations
 
 import math
-from typing import Dict, List, Sequence, Tuple
+from typing import Callable, Dict, List, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
@@ -90,10 +90,13 @@ def score_terms_in_segment(
     operator: str = "or",
     msm: int = 0,
     n_required: int | None = None,
+    term_score: Callable[[str, np.ndarray, np.ndarray], np.ndarray] | None = None,
 ) -> Tuple[np.ndarray, np.ndarray]:
     """Sum per-term BM25 over a segment. Returns (docIds, scores) of
     matching docs (operator='and' keeps only docs with ALL terms;
     msm > 1 keeps docs matching at least msm distinct terms).
+    ``term_score(term, tf, dl_q)``, when given, replaces the BM25
+    per-term contribution (the scripted-similarity hook).
 
     ``n_required``: the GLOBAL distinct-term count of the query for
     operator='and'. A term present in the index but absent from THIS
@@ -107,15 +110,15 @@ def score_terms_in_segment(
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
     if operator == "and" and n_required is not None and len(terms) < n_required:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
+    if term_score is None:
+        def term_score(t, tf, dl_q):
+            return idf_by_term[t] * (K1 + 1.0) * tf_norm(tf, dl_q, avgdl)
     all_docs = np.concatenate([decoded[t][0] for t in terms])
-    contribs = np.concatenate(
-        [
-            idf_by_term[t]
-            * (K1 + 1.0)
-            * tf_norm(decoded[t][1].astype(np.float64), decoded[t][2], avgdl)
-            for t in terms
-        ]
-    )
+    contribs = np.concatenate([
+        np.asarray(term_score(t, decoded[t][1].astype(np.float64),
+                              decoded[t][2]), dtype=np.float64)
+        for t in terms
+    ])
     uniq, inv = np.unique(all_docs, return_inverse=True)
     scores = np.zeros(uniq.size, dtype=np.float64)
     np.add.at(scores, inv, contribs)

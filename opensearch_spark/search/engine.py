@@ -17,15 +17,20 @@ Query lifecycle (the Spark re-expression of SURVEY.md §3.1):
 5. fetch phase: broadcast-join winners back to the corpus row
 
 Scoring-context notes:
-- full-text clauses (match / match_phrase) score BM25 (bm25.py)
+- match, match_phrase (any slop) and flat bools of them on the engine's
+  field compile to ONE msearch.Program scored by ONE executor
+  (``_score_programs`` -> msearch.make_scorer): search(k), compile(),
+  count() and msearch all run it; the executor picks block-max pruning
+  when one program asks for a top-k
 - term-level clauses (term/terms/range/exists/ids) contribute a constant
   ``boost`` score (reference semantics for filter/constant_score contexts;
   the reference's BM25-on-keyword-field scoring for term-in-must is NOT
   reproduced — use filter context, which is also the reference's
   recommended usage)
-- bool combines clauses with one union + one aggregation (single shuffle):
-  each clause emits (docId, score, kind, cid); the aggregate enforces
-  must-count / must_not-absence / minimum_should_match and sums scores.
+- any other bool combines its compiled clauses with one union + one
+  aggregation (single shuffle): each clause emits (docId, score, kind,
+  cid); the aggregate enforces must-count / must_not-absence /
+  minimum_should_match and sums scores.
 """
 
 from __future__ import annotations
@@ -39,109 +44,12 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from opensearch_spark.analysis.analyzer import tokenize
 from opensearch_spark.index.build import IndexPaths, load_index
-from opensearch_spark.search import ast as A, bm25, dsl as dsl_mod, wand
+from opensearch_spark.search import ast as A, bm25, dsl as dsl_mod
 
 SCORE_SCHEMA = "docId long, score double"
 
 
 # ---- picklable scorer factories (no Spark objects captured) ----------------
-
-def _make_match_scorer(idfs: Dict[str, float], avgdl: float, operator: str,
-                       msm: int, boost: float, topk: Optional[int]):
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        if topk is not None:
-            # block-max pruned path (WAND/MaxScore analog, wand.py)
-            docs, scores, _stats = wand.score_match_topk(
-                pdf, idfs, avgdl, topk, operator, msm, boost
-            )
-        else:
-            decoded = bm25.decode_term_group(pdf)
-            docs, scores = bm25.score_terms_in_segment(
-                decoded, idfs, avgdl, operator, msm, n_required=len(idfs)
-            )
-            if boost != 1.0:
-                scores = scores * boost
-        return pd.DataFrame({"docId": docs.astype(np.int64), "score": scores})
-    return fn
-
-
-def _make_custom_sim_scorer(dfs: Dict[str, int], doc_count: int, avgdl: float,
-                            operator: str, msm: int, boost: float, simfn):
-    """Scripted-similarity match scorer (reference: SimilarityService.java:116
-    scripted similarity): per-term scores come from the user's vectorized
-    ``simfn(tf, df, dl_q, avgdl, N) -> np.ndarray`` instead of BM25;
-    combination (sum per doc, operator/msm gating) matches the match
-    query contract."""
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        decoded = bm25.decode_term_group(pdf)
-        terms = sorted(t for t in dfs if t in decoded)
-        if not terms:
-            return pd.DataFrame({"docId": pd.Series([], dtype=np.int64),
-                                 "score": pd.Series([], dtype=np.float64)})
-        all_docs = np.concatenate([decoded[t][0] for t in terms])
-        contribs = np.concatenate([
-            boost * np.asarray(
-                simfn(decoded[t][1].astype(np.float64), dfs[t],
-                      decoded[t][2], avgdl, doc_count),
-                dtype=np.float64,
-            )
-            for t in terms
-        ])
-        uniq, inv = np.unique(all_docs, return_inverse=True)
-        scores = np.zeros(uniq.size, dtype=np.float64)
-        np.add.at(scores, inv, contribs)
-        nmatch = np.zeros(uniq.size, dtype=np.int64)
-        np.add.at(nmatch, inv, 1)
-        if operator == "and":
-            # required count = GLOBAL distinct query terms (dfs), not the
-            # segment-present subset — see bm25.score_terms_in_segment
-            keep = nmatch == len(dfs)
-        elif msm > 1:
-            keep = nmatch >= msm
-        else:
-            keep = slice(None)
-        return pd.DataFrame({"docId": uniq[keep].astype(np.int64),
-                             "score": scores[keep]})
-
-    return fn
-
-
-def _make_phrase_scorer(terms: List[str], idfs: Dict[str, float], avgdl: float,
-                        boost: float, topk: Optional[int]):
-    idf_sum = sum(idfs[t] for t in terms)
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        if topk is not None:
-            docs, scores, _stats = wand.score_phrase_topk(
-                pdf, terms, idfs, avgdl, topk, boost
-            )
-        else:
-            decoded = bm25.decode_term_group(pdf, want_positions=True)
-            docs, pf, dl_q = bm25.phrase_freq_in_segment(decoded, terms)
-            scores = (
-                boost * idf_sum * (bm25.K1 + 1.0)
-                * bm25.tf_norm(pf.astype(np.float64), dl_q, avgdl)
-            )
-        return pd.DataFrame({"docId": docs.astype(np.int64), "score": scores})
-    return fn
-
-
-def _make_sloppy_phrase_scorer(terms: List[str], idfs: Dict[str, float],
-                               avgdl: float, slop: int, boost: float):
-    idf_sum = sum(idfs[t] for t in terms)
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        decoded = bm25.decode_term_group(pdf, want_positions=True)
-        docs, pf, dl_q = bm25.sloppy_phrase_freq_in_segment(decoded, terms, slop)
-        scores = (
-            boost * idf_sum * (bm25.K1 + 1.0)
-            * bm25.tf_norm(pf, dl_q, avgdl)
-        )
-        return pd.DataFrame({"docId": docs.astype(np.int64), "score": scores})
-
-    return fn
-
 
 def _span_expr(node) -> tuple:
     """Span AST -> picklable expression tree for the scorer UDF.
@@ -492,8 +400,7 @@ class SearchEngine:
         self._field_stats_cache: dict | None = None
         import threading as _threading
 
-        self._msearch_plans: Dict[tuple, DataFrame] = {}
-        self._search_plans: Dict[tuple, DataFrame] = {}
+        self._plan_cache: Dict[tuple, DataFrame] = {}
         # msearch_many drives msearch/search from a thread pool: cache
         # get/evict/put must be atomic or two threads evicting the same
         # head key race into KeyError
@@ -691,37 +598,56 @@ class SearchEngine:
             raise ValueError(
                 f"from+size {from_ + k} exceeds max_result_window {self.MAX_RESULT_WINDOW}"
             )
-        # hot-query plan cache (the request-cache analog,
-        # indices/IndicesRequestCache.java — keyed on the whole request):
-        # a repeated identical search returns the SAME compiled
-        # DataFrame, skipping Catalyst analysis and reusing finished
-        # shuffle stages on re-collect.
-        sig = None
-        if isinstance(query, dict):
-            import json as _json
+        return self._cached_plan(
+            ["search", query, sort, search_after, collapse, slice_, int(k),
+             int(from_), terminate_after],
+            lambda: self._search_plan(query, k, from_, sort, search_after,
+                                      collapse, terminate_after, slice_))
 
-            try:
-                sig = (_json.dumps(
-                    [query, sort, search_after, collapse, slice_],
-                    sort_keys=True), int(k), int(from_),
-                    terminate_after, self._n_deletes)
-            except TypeError:
-                sig = None
-        if sig is not None:
-            with self._plan_cache_lock:
-                cached = self._search_plans.get(sig)
-            if cached is not None:
-                return cached
+    def _cached_plan(self, request: list, build) -> DataFrame:
+        """Compiled-plan cache shared by search() and msearch() (the
+        request-cache analog, indices/IndicesRequestCache.java — keyed
+        on the whole request plus the tombstone count): a repeated
+        identical request returns the SAME DataFrame, skipping Catalyst
+        analysis and reusing finished shuffle stages on re-collect.
+        Requests that are not plain JSON (e.g. AST nodes) are built
+        uncached."""
+        import json as _json
+
+        try:
+            sig = (_json.dumps(request, sort_keys=True), self._n_deletes)
+        except TypeError:
+            return build()
+        with self._plan_cache_lock:
+            cached = self._plan_cache.get(sig)
+        if cached is not None:
+            return cached
+        out = build()
+        with self._plan_cache_lock:
+            if len(self._plan_cache) >= self.MSEARCH_PLAN_CACHE:
+                self._plan_cache.pop(next(iter(self._plan_cache)), None)
+            self._plan_cache[sig] = out
+        return out
+
+    def _invalidate_caches(self) -> None:
+        """Forget every cached plan and term statistic (after the index
+        under this engine was rewritten)."""
+        with self._plan_cache_lock:
+            self._plan_cache.clear()
+        self._term_df_map = None
+        self._idf_cache.clear()
+        self._field_stats_cache = None
+
+    def _search_plan(self, query, k, from_, sort, search_after, collapse,
+                     terminate_after, slice_) -> DataFrame:
         node = dsl_mod.parse(query) if isinstance(query, dict) else dsl_mod.normalize(query)
         # terminate_after selects per-segment docId-order heads from the
-        # FULL matched set; the pruned top-k program over-fetches only
+        # FULL matched set; per-segment top-k pruning keeps only
         # score-ordered heads, so it must not feed it
         prune = (sort is None and search_after is None and from_ == 0
                  and collapse is None and slice_ is None
                  and terminate_after is None)
-        df = self._search_topk_program(node, k) if prune else None
-        if df is None:
-            df = self.compile(node, topk=k if prune else None)
+        df = self.compile(node, topk=k if prune else None)
         if slice_ is not None:
             # sliced scroll (reference: search/slice/SliceBuilder.java:82)
             # — deterministic hash partition of the matching docs so N
@@ -825,12 +751,6 @@ class SearchEngine:
             out = out.offset(from_).limit(k)
         else:
             out = out.limit(k)
-        if sig is not None:
-            with self._plan_cache_lock:
-                if len(self._search_plans) >= self.MSEARCH_PLAN_CACHE:
-                    self._search_plans.pop(
-                        next(iter(self._search_plans), None), None)
-                self._search_plans[sig] = out
         return out
 
     def request(self, body: dict) -> dict:
@@ -1622,8 +1542,8 @@ class SearchEngine:
         )
         return [{"text": r["term"], "weight": int(r["w"])} for r in rows]
 
-    # compiled-plan cache size for repeated msearch batches (serving
-    # regime: the same query template batch arrives continuously)
+    # entries in the compiled-plan cache shared by search() and msearch()
+    # (serving regime: the same requests arrive continuously)
     MSEARCH_PLAN_CACHE = 32
 
     def rank_eval(self, body: dict) -> dict:
@@ -1643,31 +1563,12 @@ class SearchEngine:
         Returns DataFrame(qid, docId, score), per-qid top-k ordered by
         (score desc, docId asc).
 
-        Repeated batches hit a small compiled-plan cache: re-collecting
-        the SAME DataFrame object skips Catalyst analysis/optimization,
-        which is the fixed per-batch driver cost in the serving regime."""
-        import json as _json
-
-        sig = None
-        if all(isinstance(q, dict) for q in queries):
-            try:
-                sig = (_json.dumps(list(queries), sort_keys=True), int(k),
-                       self._n_deletes)
-            except TypeError:
-                sig = None
-        if sig is not None:
-            with self._plan_cache_lock:
-                cached = self._msearch_plans.get(sig)
-            if cached is not None:
-                return cached
-        out = self._msearch_build(queries, k)
-        if sig is not None:
-            with self._plan_cache_lock:
-                if len(self._msearch_plans) >= self.MSEARCH_PLAN_CACHE:
-                    self._msearch_plans.pop(
-                        next(iter(self._msearch_plans), None), None)
-                self._msearch_plans[sig] = out
-        return out
+        Repeated batches hit the compiled-plan cache (_cached_plan):
+        re-collecting the SAME DataFrame object skips Catalyst analysis/
+        optimization, which is the fixed per-batch driver cost in the
+        serving regime."""
+        return self._cached_plan(["msearch", list(queries), int(k)],
+                                 lambda: self._msearch_build(queries, k))
 
     def msearch_many(self, batches: Sequence[Sequence[dict]], k: int = 10,
                      max_concurrent: int = 4) -> list:
@@ -1694,8 +1595,8 @@ class SearchEngine:
         :meth:`count` for callers composing plans: the match predicate
         + a partial-aggregated COUNT — no top-k heap, no fetch phase,
         nothing driver-side but the single row. (:meth:`count` itself
-        additionally takes a no-scoring postings shortcut for plain
-        match queries and returns the int.)"""
+        additionally answers a one-term match from termstats and
+        returns the int.)"""
         node = (dsl_mod.parse(query) if isinstance(query, dict)
                 else dsl_mod.normalize(query))
         return self.compile(node).agg(
@@ -1721,41 +1622,17 @@ class SearchEngine:
     def _msearch_build(self, queries: Sequence[dict], k: int) -> DataFrame:
         from pyspark.sql import Window
 
-        from opensearch_spark.search import msearch as M
-
         nodes = [
             dsl_mod.parse(q) if isinstance(q, dict) else dsl_mod.normalize(q)
             for q in queries
         ]
-        cand: set = set()
-        for n in nodes:
-            cand |= M.candidate_terms(n, self._tok)
-        idfs_all = self._idfs(sorted(cand)) if cand else {}
-        known = {t for t, v in idfs_all.items() if v == v}
-
-        programs: List[M.Program] = []
-        fallback: List[tuple] = []
-        for qid, n in enumerate(nodes):
-            p = None if self.similarity is not None else M.build_program(qid, n, known, self._tok)
-            if p is None:
-                fallback.append((qid, n))
-            else:
-                programs.append(p)
-
+        programs, fallback, idfs = self._programs(nodes)
         parts: List[DataFrame] = []
-        terms = M.required_terms(programs)
-        if terms:
-            idfs = {t: idfs_all[t] for t in known}
+        if programs:
             # over-fetch per segment by the tombstone count (deletes are
             # filtered after the per-segment heads are taken)
-            scorer = M.make_msearch_scorer(
-                programs, idfs, self.avgdl, k + self._n_deletes
-            )
-            parts.append(
-                self._postings_for(terms)
-                .groupBy("seg")
-                .applyInPandas(scorer, M.MSEARCH_SCHEMA)
-            )
+            parts.append(self._score_programs(programs, idfs,
+                                              k + self._n_deletes))
         for qid, n in fallback:
             df = (
                 self.compile(n, topk=k)
@@ -1779,44 +1656,58 @@ class SearchEngine:
             .orderBy("qid", F.desc("score"), F.asc("docId"))
         )
 
-    def _search_topk_program(self, node: A.AnyNode, k: int) -> Optional[DataFrame]:
-        """Single-query hot path for BOOL trees: compile the whole
-        boolean program into ONE per-segment ``applyInPandas`` (the
-        msearch machinery, msearch.py:64) emitting per-segment top-k —
-        no per-clause union and no docId-keyed shuffle (the reference
-        evaluates the whole BooleanQuery per segment too). Returns None
-        when the node family is unsupported (caller falls back to the
-        exhaustive per-clause compiler) — bare match/phrase leaves keep
-        their WAND block-max path, which prunes harder."""
+    def _programs(self, nodes: Sequence[A.AnyNode]) -> tuple:
+        """AST nodes -> (programs, [(qid, node)] that are not
+        program-expressible, idfs of the terms present in the index).
+        One IDF lookup serves every node."""
         from opensearch_spark.search import msearch as M
 
-        if not isinstance(node, A.Bool):
-            return None
-        if self.similarity is not None:
-            return None  # program scorer is BM25-only
-        if self._n_deletes > self.MAX_PRUNE_DELETES:
-            return None
-        cand = M.candidate_terms(node, self._tok)
-        idfs_all = self._idfs(sorted(cand)) if cand else {}
-        known = {t for t, v in idfs_all.items() if v == v}
-        prog = M.build_program(0, node, known, self._tok)
-        if prog is None:
-            return None
-        if prog.match_none:
-            return self._empty()
-        terms = M.required_terms([prog])
+        cand: set = set()
+        for n in nodes:
+            cand |= M.candidate_terms(n, self._tok)
+        idfs = {t: v for t, v in self._idfs(cand).items() if v == v}  # NaN = absent
+        programs, rest = [], []
+        for qid, n in enumerate(nodes):
+            p = M.build_program(qid, n, idfs, self._tok, self.text_field,
+                                phrases=self._index_options != "docs")
+            if p is None:
+                rest.append((qid, n))
+            else:
+                programs.append(p)
+        return programs, rest, idfs
+
+    def _score_programs(self, programs, idfs: Dict[str, float],
+                        k: Optional[int] = None) -> DataFrame:
+        """The one scoring stage for match / phrase / bool programs:
+        (qid, docId, score) rows, a per-segment top-k per program when
+        ``k`` is given (msearch.make_scorer picks the pruning)."""
+        from opensearch_spark.search import msearch as M
+
+        terms = M.required_terms(programs)
         if not terms:
-            return self._empty()
-        scorer = M.make_single_program_scorer(
-            prog, {t: idfs_all[t] for t in known}, self.avgdl,
-            k + self._n_deletes,
-        )
-        out = (
+            return self.spark.createDataFrame([], M.MSEARCH_SCHEMA)
+        term_score = None
+        if self.similarity is not None:
+            sim, dfs = self.similarity, self._dfs(terms)
+            avgdl, n = self.avgdl, self.doc_count
+
+            def term_score(t, tf, dl_q):
+                return sim(tf, dfs[t], dl_q, avgdl, n)
+        scorer = M.make_scorer(programs, idfs, self.avgdl, k, term_score)
+        return (
             self._postings_for(terms)
             .groupBy("seg")
-            .applyInPandas(scorer, SCORE_SCHEMA)
+            .applyInPandas(scorer, M.MSEARCH_SCHEMA)
         )
-        return self._live(out)
+
+    def _program_frame(self, node: A.AnyNode, topk: Optional[int]
+                       ) -> Optional[DataFrame]:
+        """A match / phrase / flat bool scored as ONE program, or None
+        when the node is not program-expressible."""
+        programs, _, idfs = self._programs([node])
+        if not programs:
+            return None
+        return self._score_programs(programs, idfs, topk).select("docId", "score")
 
     def fetch(self, hits: DataFrame) -> DataFrame:
         """Join top-k hits back to corpus rows (the fetch phase)."""
@@ -1827,52 +1718,18 @@ class SearchEngine:
         )
 
     def count(self, query: dict | A.AnyNode) -> int:
-        """Hit count. Match queries take a no-scoring shortcut (reference:
-        shortcutTotalHitCount, TopDocsCollectorContext.java:154): a
-        single-term count is answered from the termstats table alone; a
-        multi-term match counts per-segment doc-set unions/intersections
-        without any BM25 math or norm use. Falls back to the full
-        compiler for other node families or when tombstones exist."""
+        """Hit count. A match whose only indexed term is one term is
+        answered from the termstats table alone (reference:
+        shortcutTotalHitCount, TopDocsCollectorContext.java:154);
+        everything else counts the compiled query's rows."""
         node = dsl_mod.parse(query) if isinstance(query, dict) else dsl_mod.normalize(query)
-        if self.deletes is None and isinstance(node, A.Match):
-            terms = self._tok(node.query)
-            if terms:
-                dfs = self._dfs(terms)
-                uniq = sorted(set(terms))
-                known = [t for t in uniq if dfs.get(t, 0) > 0]
-                if node.operator == "and" and len(known) < len(uniq):
-                    return 0
-                if not known:
-                    return 0
-                if len(known) == 1 and node.minimum_should_match <= 1:
-                    return int(dfs[known[0]])
-                op, msm = node.operator, node.minimum_should_match
-
-                def count_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-                    decoded = bm25.decode_term_group(pdf)
-                    arrays = [decoded[t][0] for t in known if t in decoded]
-                    if not arrays:
-                        return pd.DataFrame({"n": [0]})
-                    if op == "and":
-                        if len(arrays) < len(known):
-                            return pd.DataFrame({"n": [0]})
-                        base = arrays[0]
-                        for a in arrays[1:]:
-                            base = base[np.isin(base, a, assume_unique=True)]
-                        return pd.DataFrame({"n": [int(base.size)]})
-                    allc = np.concatenate(arrays)
-                    u, counts = np.unique(allc, return_counts=True)
-                    if msm > 1:
-                        u = u[counts >= msm]
-                    return pd.DataFrame({"n": [int(u.size)]})
-
-                per_seg = (
-                    self._postings_for(known)
-                    .groupBy("seg")
-                    .applyInPandas(count_fn, "n long")
-                )
-                row = per_seg.agg(F.sum("n").alias("n")).collect()[0]
-                return int(row["n"] or 0)
+        if (self.deletes is None and isinstance(node, A.Match)
+                and node.field_name == self.text_field
+                and node.minimum_should_match <= 1):
+            uniq = set(self._tok(node.query))
+            dfs = {t: n for t, n in self._dfs(uniq).items() if n > 0}
+            if len(dfs) == 1 and (node.operator == "or" or len(uniq) == 1):
+                return int(next(iter(dfs.values())))
         return self.compile(node).count()
 
     # ---- compilation ----------------------------------------------------
@@ -1899,7 +1756,7 @@ class SearchEngine:
         if isinstance(node, A.MatchPhrase):
             return self._phrase(node, topk)
         if isinstance(node, A.Bool):
-            return self._bool(node)
+            return self._bool(node, topk)
         if isinstance(node, A.MatchAll):
             return self.docstats.select("docId", F.lit(float(node.boost)).alias("score"))
         if isinstance(node, A.MatchNone):
@@ -2661,36 +2518,9 @@ class SearchEngine:
 
     def _match(self, node: A.Match, topk: Optional[int]) -> DataFrame:
         self._check_field(node.field_name)
-        terms = self._tok(node.query)
-        if not terms:
-            if node.zero_terms_query == "all":
-                return self.compile(A.MatchAll(boost=node.boost))
-            return self._empty()
-        idfs = {t: v for t, v in self._idfs(terms).items() if v == v}  # drop NaN (missing)
-        if not idfs:
-            return self._empty()
-        if node.operator == "and" and len(idfs) < len(set(terms)):
-            return self._empty()  # a required term is absent from the index
-        if self.similarity is not None:
-            dfs = self._dfs(list(idfs))
-            scorer = _make_custom_sim_scorer(
-                dfs, self.doc_count, self.avgdl, node.operator,
-                node.minimum_should_match, float(node.boost), self.similarity,
-            )
-            return (
-                self._postings_for(list(idfs))
-                .groupBy("seg")
-                .applyInPandas(scorer, SCORE_SCHEMA)
-            )
-        scorer = _make_match_scorer(
-            idfs, self.avgdl, node.operator, node.minimum_should_match,
-            float(node.boost), topk,
-        )
-        return (
-            self._postings_for(list(idfs))
-            .groupBy("seg")
-            .applyInPandas(scorer, SCORE_SCHEMA)
-        )
+        if not self._tok(node.query) and node.zero_terms_query == "all":
+            return self.compile(A.MatchAll(boost=node.boost))
+        return self._program_frame(node, topk)
 
     def _phrase_via_source(self, node: A.MatchPhrase) -> DataFrame:
         """Phrase over a docs-only (match_only_text) index (reference:
@@ -2700,6 +2530,10 @@ class SearchEngine:
         phrase terms, scored by the match-only idf sum; the adjacency
         check is a pure Catalyst exists() over the re-tokenized corpus
         column (no positions stored in the index)."""
+        if node.slop != 0:
+            raise ValueError(
+                "sloppy phrases are not supported on a docs-only "
+                "(match_only_text) index")
         if self.corpus is None:
             raise ValueError(
                 "phrase on a docs-only index needs an attached corpus "
@@ -2739,58 +2573,16 @@ class SearchEngine:
         return scores.join(verify, "docId")
 
     def _phrase(self, node: A.MatchPhrase, topk: Optional[int]) -> DataFrame:
+        """match_phrase; slop > 0 phrases (reference: MatchPhraseQueryBuilder
+        slop / Lucene sloppy phrase) match with Lucene's semantics
+        (adjusted-position width <= slop, transposition costs 2 for
+        2-term phrases; in-order chains for k > 2); sloppy_freq weighting
+        is a documented deterministic variant (bm25.sloppy_phrase_freq_
+        in_segment)."""
         self._check_field(node.field_name)
-        if getattr(self, "_index_options", "positions") == "docs":
-            if node.slop != 0:
-                raise ValueError(
-                    "sloppy phrases are not supported on a docs-only "
-                    "(match_only_text) index")
+        if self._index_options == "docs":
             return self._phrase_via_source(node)
-        if node.slop != 0:
-            return self._sloppy_phrase(node)
-        terms = self._tok(node.query)
-        if not terms:
-            return self._empty()
-        idf_map = self._idfs(terms)
-        if any(v != v for v in idf_map.values()):
-            return self._empty()  # phrase term absent from index
-        if len(terms) == 1:
-            return self._match(
-                A.Match(field_name=node.field_name, query=node.query, boost=node.boost), topk
-            )
-        scorer = _make_phrase_scorer(terms, idf_map, self.avgdl, float(node.boost), topk)
-        return (
-            self._postings_for(terms)
-            .groupBy("seg")
-            .applyInPandas(scorer, SCORE_SCHEMA)
-        )
-
-    def _sloppy_phrase(self, node: A.MatchPhrase) -> DataFrame:
-        """slop > 0 phrases (reference: MatchPhraseQueryBuilder slop /
-        Lucene sloppy phrase). Match semantics are Lucene's (adjusted-
-        position width <= slop, transposition costs 2 for 2-term
-        phrases; in-order chains for k > 2); sloppy_freq weighting is a
-        documented deterministic variant (bm25.sloppy_phrase_freq_in_
-        segment)."""
-        terms = self._tok(node.query)
-        if not terms:
-            return self._empty()
-        idf_map = self._idfs(terms)
-        if any(v != v for v in idf_map.values()):
-            return self._empty()
-        if len(terms) == 1:
-            return self._match(
-                A.Match(field_name=node.field_name, query=node.query,
-                        boost=node.boost), None
-            )
-        scorer = _make_sloppy_phrase_scorer(
-            terms, idf_map, self.avgdl, int(node.slop), float(node.boost)
-        )
-        return (
-            self._postings_for(terms)
-            .groupBy("seg")
-            .applyInPandas(scorer, SCORE_SCHEMA)
-        )
+        return self._program_frame(node, topk)
 
     # injectable "now" anchor for date-math bounds (tests / PIT
     # determinism); None = wall clock at evaluation
@@ -2942,7 +2734,15 @@ class SearchEngine:
 
     # ---- compound ---------------------------------------------------------
 
-    def _bool(self, node: A.Bool) -> DataFrame:
+    def _bool(self, node: A.Bool, topk: Optional[int] = None) -> DataFrame:
+        """A flat bool of match / phrase leaves on this engine's field is
+        one program. Any other bool combines its compiled clauses with one
+        union + one aggregation (single shuffle): each clause emits
+        (docId, score, kind, cid); the aggregate enforces must-count /
+        must_not-absence / minimum_should_match and sums scores."""
+        df = self._program_frame(node, topk)
+        if df is not None:
+            return df
         KIND_MUST, KIND_FILTER, KIND_SHOULD, KIND_NOT = 0, 1, 2, 3
         parts: List[DataFrame] = []
 

@@ -1,44 +1,52 @@
-"""_msearch: batched multi-query execution in ONE Spark job.
+"""Programs: the one IR and the one per-segment executor for match,
+match_phrase and flat bools of them.
 
-Reference: the `_msearch` endpoint executes a list of search requests in
-a single round trip (``action/search/TransportMultiSearchAction.java``,
-``rest/action/search/RestMultiSearchAction.java``); per-shard, each
-request still runs its own query phase. The Spark re-expression goes
-further: ALL queries in the batch share one postings scan and one
-per-segment decode —
+A Program is a flat boolean combination of match / phrase clauses
+(must | filter | should | must_not, with operator, minimum_should_match,
+slop and boosts). Every engine path that scores such a query — search(k),
+compile(), count() and the batched ``_msearch`` — builds Programs and
+runs them through ONE executor (``make_scorer``) in ONE Python stage:
 
-    postings.filter(term IN union-of-all-query-terms)
+    postings.filter(term IN union-of-program-terms)
       .groupBy(seg)
-      .applyInPandas(multi_query_scorer)      # ONE python stage
-      -> (qid, docId, score) per-segment top-k per query
-      .Window(partitionBy qid).row_number <= k   # global reduce
+      .applyInPandas(make_scorer(programs, idfs, avgdl, k))
+      -> (qid, docId, score) per segment
 
-so a batch of Q queries costs one shuffle + one Python stage instead of
-Q jobs. Per-segment posting blocks are decoded ONCE and reused by every
-query that references the term (the dominant cost for hot terms).
+Inside a segment the executor picks the pruning itself:
 
-This is the engine's high-throughput serving path: cluster query
-throughput is measured by pushing batches through msearch, which keeps
-every executor busy regardless of per-query selectivity.
+- one program with a ``k``: block-max top-k — ``wand.score_match_topk``
+  for a bare match, ``wand.score_phrase_topk`` for an exact phrase,
+  ``wand.score_program_topk`` (conjunction-led) for a program with a
+  required clause;
+- otherwise: every program over ONE shared decode of the segment's
+  posting blocks (``_run_program``), so a batch of Q queries decodes a
+  hot term once, plus a per-program top-k when ``k`` is given.
 
-Supported query family (the hot path): match / match_phrase /
-bool(must|should|filter|must_not of match/phrase) — with operator,
-minimum_should_match, and boosts. Anything else falls back to the
-regular per-query compiler and is unioned into the same result shape.
+A scripted similarity replaces the BM25 per-term contribution of match
+clauses; pruning is off then (the block bounds are BM25's). Sloppy
+phrases (slop > 0) are scored exhaustively.
+
+The coordinator reduce belongs to the caller: one query ends in
+TakeOrderedAndProject (orderBy + limit), a batch in a Window
+(partitionBy qid, row_number <= k). Reference: the ``_msearch`` endpoint
+(``action/search/TransportMultiSearchAction.java``) and Lucene's single
+Weight/BulkScorer contract for every query.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from typing import Dict, List, Optional, Sequence, Tuple
+from dataclasses import asdict, dataclass, field
+from typing import Callable, Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
 
 from opensearch_spark.analysis.analyzer import tokenize
-from opensearch_spark.search import ast as A, bm25
+from opensearch_spark.search import ast as A, bm25, wand
 
 MSEARCH_SCHEMA = "qid int, docId long, score double"
+
+_EMPTY = (np.empty(0, np.int64), np.empty(0, np.float64))
 
 
 @dataclass
@@ -49,6 +57,7 @@ class _Clause:
     operator: str = "or"
     msm: int = 0
     weight: float = 1.0  # clause-level boost
+    slop: int = 0        # phrase only; > 0 = sloppy phrase
 
 
 @dataclass
@@ -56,39 +65,39 @@ class Program:
     qid: int
     clauses: List[_Clause] = field(default_factory=list)
     bool_msm: int = 0     # minimum_should_match across should clauses
-    n_must: int = 0       # number of must+filter clauses (all required)
     boost: float = 1.0
     match_none: bool = False
 
 
-def build_program(qid: int, node: A.AnyNode, known_terms: set,
-                  tok=tokenize) -> Optional[Program]:
-    """AST -> flat scoring program, or None if the node family is
-    unsupported (caller falls back to the general compiler).
+def build_program(qid: int, node: A.AnyNode, known_terms, tok=tokenize,
+                  field_name: Optional[str] = None,
+                  phrases: bool = True) -> Optional[Program]:
+    """AST -> flat scoring program, or None if the node is not
+    program-expressible (caller falls back to the general compiler):
+    another node family, a nested compound, ``zero_terms_query: all``
+    with no terms, a pure-negative bool, a leaf on a field other than
+    ``field_name``, or any phrase when ``phrases`` is False (a docs-only
+    index verifies phrases against the source).
 
-    ``known_terms``: terms present in the index — used to reproduce the
-    single-query compiler's missing-term semantics at build time
-    (OR drops missing terms; AND/phrase with a missing term match
-    nothing)."""
+    ``known_terms``: terms present in the index — reproduces the
+    missing-term semantics at build time (OR drops missing terms;
+    AND/phrase with a missing term match nothing)."""
     prog = Program(qid=qid, boost=float(getattr(node, "boost", 1.0)))
 
     def leaf(n: A.AnyNode, occur: str) -> bool:
+        if not isinstance(n, (A.Match, A.MatchPhrase)):
+            return False
+        if field_name is not None and n.field_name != field_name:
+            return False
+        terms = tok(n.query)
+        required = occur in ("must", "filter")
         if isinstance(n, A.Match):
-            terms = tok(n.query)
+            if not terms and n.zero_terms_query == "all":
+                return False  # match_all semantics
             present = [t for t in terms if t in known_terms]
-            if not terms:
-                if n.zero_terms_query == "all":
-                    return False  # match_all semantics -> fallback path
-                # zero_terms "none": a required empty match kills the bool
-                if occur in ("must", "filter"):
-                    prog.match_none = True
-                return True
-            if n.operator == "and" and len(set(present)) < len(set(terms)):
-                prog.match_none = prog.match_none or occur in ("must", "filter")
-                return occur in ("must", "filter", "should")
-            if not present:
-                if occur in ("must", "filter"):
-                    prog.match_none = True
+            if not present or (n.operator == "and"
+                               and len(set(present)) < len(set(terms))):
+                prog.match_none |= required  # the clause matches nothing
                 return True
             prog.clauses.append(_Clause(
                 occur=occur, kind="match", terms=present,
@@ -96,60 +105,32 @@ def build_program(qid: int, node: A.AnyNode, known_terms: set,
                 weight=float(n.boost),
             ))
             return True
-        if isinstance(n, A.MatchPhrase):
-            if n.slop != 0:
-                return False
-            terms = tok(n.query)
-            if not terms:
-                return True
-            if any(t not in known_terms for t in terms):
-                if occur in ("must", "filter"):
-                    prog.match_none = True
-                return True
-            if len(terms) == 1:
-                prog.clauses.append(_Clause(
-                    occur=occur, kind="match", terms=terms, weight=float(n.boost)
-                ))
-                return True
-            prog.clauses.append(_Clause(
-                occur=occur, kind="phrase", terms=terms, weight=float(n.boost)
-            ))
+        if not phrases:
+            return False
+        if not terms or any(t not in known_terms for t in terms):
+            prog.match_none |= required
             return True
-        return False
+        prog.clauses.append(_Clause(
+            occur=occur, kind="match" if len(terms) == 1 else "phrase",
+            terms=terms, weight=float(n.boost), slop=int(n.slop),
+        ))
+        return True
 
     if isinstance(node, (A.Match, A.MatchPhrase)):
         if not leaf(node, "must"):
             return None
-        prog.n_must = 1 if prog.clauses or prog.match_none else 0
-        # boost belongs to the leaf itself, not doubled at program level
-        prog.boost = 1.0
+        prog.boost = 1.0  # a leaf's boost is its clause weight
         return prog
-    if isinstance(node, A.Bool):
-        for c in node.must:
-            if not leaf(c, "must"):
-                return None
-        for c in node.filter:
-            if not leaf(c, "filter"):
-                return None
-        for c in node.should:
-            if not leaf(c, "should"):
-                return None
-        for c in node.must_not:
-            if not leaf(c, "must_not"):
-                return None
-        if not node.must and not node.filter and node.must_not and not node.should:
-            return None  # pure-negative bool: needs match_all base — fall back
-        prog.n_must = sum(1 for c in prog.clauses if c.occur in ("must", "filter"))
-        # account for required clauses that vanished due to missing terms
-        n_req_ast = len(node.must) + len(node.filter)
-        if n_req_ast and not prog.match_none:
-            n_req_built = prog.n_must
-            if n_req_built < n_req_ast:
-                # a required clause matched nothing (e.g. empty-token match)
-                pass
-        prog.bool_msm = node.effective_msm()
-        return prog
-    return None
+    if not isinstance(node, A.Bool):
+        return None
+    if not (node.must or node.filter or node.should):
+        return None  # pure-negative / empty bool: needs a match_all base
+    for occur, cs in (("must", node.must), ("filter", node.filter),
+                      ("should", node.should), ("must_not", node.must_not)):
+        if not all(leaf(c, occur) for c in cs):
+            return None
+    prog.bool_msm = node.effective_msm()
+    return prog
 
 
 def candidate_terms(node: A.AnyNode, tok=tokenize) -> set:
@@ -167,98 +148,83 @@ def candidate_terms(node: A.AnyNode, tok=tokenize) -> set:
 
 
 def required_terms(programs: Sequence[Program]) -> List[str]:
-    out: set = set()
-    for p in programs:
-        for c in p.clauses:
-            out.update(c.terms)
-    return sorted(out)
+    """Terms whose postings the live programs read."""
+    return sorted({t for p in programs if not p.match_none
+                   for c in p.clauses for t in c.terms})
 
 
-def make_msearch_scorer(programs: List[Program], idfs: Dict[str, float],
-                        avgdl: float, k: int):
+TermScore = Callable[[str, np.ndarray, np.ndarray], np.ndarray]
+
+
+def make_scorer(programs: List[Program], idfs: Dict[str, float],
+                avgdl: float, k: Optional[int] = None,
+                term_score: Optional[TermScore] = None):
     """applyInPandas fn scoring every program against one segment's
-    decoded postings; emits per-(query, segment) top-k."""
-    want_pos = any(c.kind == "phrase" for p in programs for c in p.clauses)
+    posting blocks; emits (qid, docId, score), per-program top-k when
+    ``k`` is given. ``term_score(term, tf, dl_q)`` replaces the BM25
+    per-term contribution of match clauses (scripted similarity)."""
+    progs = [p for p in programs if p.clauses and not p.match_none]
+    want_pos = any(c.kind == "phrase" for p in progs for c in p.clauses)
+    prune = (k is not None and len(progs) == 1 and term_score is None
+             and not any(c.slop for c in progs[0].clauses))
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        decoded = bm25.decode_term_group(pdf, want_positions=want_pos)
-        out_qid: List[np.ndarray] = []
-        out_doc: List[np.ndarray] = []
-        out_score: List[np.ndarray] = []
-        for prog in programs:
-            if prog.match_none:
-                continue
-            docs, scores = _run_program(prog, decoded, idfs, avgdl)
-            if docs.size == 0:
-                continue
-            docs, scores = bm25.topk_by_score(docs, scores, k)
-            if prog.boost != 1.0:
-                scores = scores * prog.boost
-            out_qid.append(np.full(docs.size, prog.qid, dtype=np.int32))
-            out_doc.append(docs)
-            out_score.append(scores)
-        if not out_doc:
-            return pd.DataFrame({"qid": [], "docId": [], "score": []}).astype(
-                {"qid": np.int32, "docId": np.int64, "score": np.float64}
-            )
+        hits = _pruned_topk(progs[0], pdf, idfs, avgdl, k) if prune else None
+        if hits is not None:
+            parts = [(progs[0].qid, *hits)]
+        else:
+            decoded = bm25.decode_term_group(pdf, want_positions=want_pos)
+            parts = []
+            for p in progs:
+                docs, scores = _run_program(p, decoded, idfs, avgdl, term_score)
+                if k is not None:
+                    docs, scores = bm25.topk_by_score(docs, scores, k)
+                if p.boost != 1.0:
+                    scores = scores * p.boost
+                parts.append((p.qid, docs, scores))
+        parts = parts or [(0, *_EMPTY)]
         return pd.DataFrame({
-            "qid": np.concatenate(out_qid),
-            "docId": np.concatenate(out_doc),
-            "score": np.concatenate(out_score),
+            "qid": np.concatenate([np.full(d.size, q, dtype=np.int32)
+                                   for q, d, _ in parts]),
+            "docId": np.concatenate([d for _, d, _ in parts]).astype(np.int64),
+            "score": np.concatenate([s for _, _, s in parts]),
         })
 
     return fn
 
 
-def make_single_program_scorer(prog: Program, idfs: Dict[str, float],
-                               avgdl: float, k: int):
-    """Single-query program scorer with conjunction-led block pruning
-    (wand.score_program_topk): when the program has required clauses,
-    should/must_not clauses decode only candidate-overlapping posting
-    blocks. Falls back to the shared-decode exhaustive program when the
-    program is pure-should (the msearch batch regime)."""
-    from opensearch_spark.search import wand as W
-
-    clause_dicts = [
-        {"occur": c.occur, "kind": c.kind, "terms": c.terms,
-         "operator": c.operator, "msm": c.msm, "weight": c.weight}
-        for c in prog.clauses
-    ]
-    has_required = any(c.occur in ("must", "filter") for c in prog.clauses)
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        if prog.match_none:
-            return pd.DataFrame({"docId": pd.Series([], dtype=np.int64),
-                                 "score": pd.Series([], dtype=np.float64)})
-        if has_required:
-            out = W.score_program_topk(
-                pdf, clause_dicts, prog.bool_msm, idfs, avgdl, k,
-                boost=prog.boost,
-            )
-            if out is not None:
-                docs, scores, _stats = out
-                return pd.DataFrame({"docId": docs.astype(np.int64),
-                                     "score": scores})
-        want_pos = any(c.kind == "phrase" for c in prog.clauses)
-        decoded = bm25.decode_term_group(pdf, want_positions=want_pos)
-        docs, scores = _run_program(prog, decoded, idfs, avgdl)
-        docs, scores = bm25.topk_by_score(docs, scores, k)
-        if prog.boost != 1.0:
-            scores = scores * prog.boost
-        return pd.DataFrame({"docId": docs.astype(np.int64), "score": scores})
-
-    return fn
+def _pruned_topk(prog: Program, pdf: pd.DataFrame, idfs, avgdl, k
+                 ) -> Optional[Tuple[np.ndarray, np.ndarray]]:
+    """Block-max top-k of one program over one segment, or None when no
+    pruned scorer applies (a pure-should bool)."""
+    c = prog.clauses[0]
+    if len(prog.clauses) == 1 and c.occur == "must":
+        if c.kind == "match":
+            docs, scores, _stats = wand.score_match_topk(
+                pdf, {t: idfs[t] for t in c.terms}, avgdl, k,
+                c.operator, c.msm, c.weight)
+        else:
+            docs, scores, _stats = wand.score_phrase_topk(
+                pdf, c.terms, idfs, avgdl, k, c.weight)
+        return docs, (scores * prog.boost if prog.boost != 1.0 else scores)
+    out = wand.score_program_topk(
+        pdf, [asdict(c) for c in prog.clauses], prog.bool_msm, idfs, avgdl,
+        k, boost=prog.boost)
+    return None if out is None else out[:2]
 
 
-def _clause_hits(c: _Clause, decoded, idfs, avgdl) -> Tuple[np.ndarray, np.ndarray]:
+def _clause_hits(c: _Clause, decoded, idfs, avgdl,
+                 term_score: Optional[TermScore] = None
+                 ) -> Tuple[np.ndarray, np.ndarray]:
     if c.kind == "match":
         docs, scores = bm25.score_terms_in_segment(
-            {t: decoded[t] for t in c.terms if t in decoded},
-            {t: idfs[t] for t in c.terms},
-            avgdl, c.operator, c.msm, n_required=len(set(c.terms)),
+            decoded, {t: idfs[t] for t in c.terms}, avgdl, c.operator,
+            c.msm, n_required=len(set(c.terms)), term_score=term_score,
         )
     else:
-        docs, pf, dl_q = bm25.phrase_freq_in_segment(decoded, c.terms)
+        docs, pf, dl_q = (
+            bm25.sloppy_phrase_freq_in_segment(decoded, c.terms, c.slop)
+            if c.slop else bm25.phrase_freq_in_segment(decoded, c.terms))
         idf_sum = sum(idfs[t] for t in c.terms)
         scores = idf_sum * (bm25.K1 + 1.0) * bm25.tf_norm(
             pf.astype(np.float64), dl_q, avgdl
@@ -270,59 +236,63 @@ def _clause_hits(c: _Clause, decoded, idfs, avgdl) -> Tuple[np.ndarray, np.ndarr
     return docs, scores
 
 
-def _run_program(prog: Program, decoded, idfs, avgdl
+def _run_program(prog: Program, decoded, idfs, avgdl,
+                 term_score: Optional[TermScore] = None
                  ) -> Tuple[np.ndarray, np.ndarray]:
-    """Bool combine in numpy: docs sorted unique per clause; required
-    clauses intersect, should clauses add + count toward msm, must_not
-    subtracts. Mirrors SearchEngine._bool's aggregate semantics."""
-    req = [(c, *_clause_hits(c, decoded, idfs, avgdl))
-           for c in prog.clauses if c.occur in ("must", "filter")]
-    sho = [(c, *_clause_hits(c, decoded, idfs, avgdl))
-           for c in prog.clauses if c.occur == "should"]
-    neg = [_clause_hits(c, decoded, idfs, avgdl)[0]
-           for c in prog.clauses if c.occur == "must_not"]
+    """Exhaustive reference scorer: every clause over the whole decoded
+    segment."""
+    return _combine(prog, lambda c, _cand: _clause_hits(
+        c, decoded, idfs, avgdl, term_score))
 
-    if prog.n_must and len(req) < prog.n_must:
-        # a required clause produced no hits structure (missing terms
-        # already handled at build time) — defensive
-        return np.empty(0, np.int64), np.empty(0, np.float64)
 
+def _combine(prog: Program, hits, lead: Optional[Sequence[int]] = None
+             ) -> Tuple[np.ndarray, np.ndarray]:
+    """Bool combine in numpy. ``hits(clause, cand)`` returns the clause's
+    (docs sorted unique, scores), and may leave out docs not in ``cand``
+    (None = no restriction). Required clauses intersect in ``lead``
+    order (indices into the required clauses; default program order),
+    then add their scores in program order, so the float association is
+    the same whatever the lead; should clauses add and count toward
+    minimum_should_match; must_not clauses subtract. Mirrors
+    SearchEngine._bool's aggregate semantics."""
+    req = [c for c in prog.clauses if c.occur in ("must", "filter")]
+    sho = [c for c in prog.clauses if c.occur == "should"]
     if req:
-        base = req[0][1]
-        for _, d, _s in req[1:]:
-            base = base[np.isin(base, d, assume_unique=True)]
+        got: Dict[int, Tuple[np.ndarray, np.ndarray]] = {}
+        base = None
+        for i in (range(len(req)) if lead is None else lead):
+            got[i] = hits(req[i], base)
+            d = got[i][0]
+            base = d if base is None else base[np.isin(base, d, assume_unique=True)]
             if base.size == 0:
-                return base, np.empty(0, np.float64)
+                return _EMPTY
         score = np.zeros(base.size, dtype=np.float64)
-        for _, d, s in req:
-            pos = np.searchsorted(d, base)
-            score += s[pos]
+        for i in range(len(req)):
+            d, s = got[i]
+            score += s[np.searchsorted(d, base)]
         s_cnt = np.zeros(base.size, dtype=np.int64)
-        for _, d, s in sho:
+        for c in sho:
+            d, s = hits(c, base)
             hit = np.isin(base, d, assume_unique=True)
-            if hit.any():
-                pos = np.searchsorted(d, base[hit])
-                score[hit] += s[pos]
-                s_cnt[hit] += 1
-        if prog.bool_msm > 0 and sho:
-            keep = s_cnt >= prog.bool_msm
-            base, score = base[keep], score[keep]
+            score[hit] += s[np.searchsorted(d, base[hit])]
+            s_cnt[hit] += 1
+        msm = prog.bool_msm
     else:
-        if not sho:
-            return np.empty(0, np.int64), np.empty(0, np.float64)
-        all_docs = np.concatenate([d for _, d, _ in sho])
-        all_scores = np.concatenate([s for _, _, s in sho])
-        base, inv = np.unique(all_docs, return_inverse=True)
+        parts = [hits(c, None) for c in sho]
+        if not parts:
+            return _EMPTY
+        base, inv = np.unique(np.concatenate([d for d, _ in parts]),
+                              return_inverse=True)
         score = np.zeros(base.size, dtype=np.float64)
-        np.add.at(score, inv, all_scores)
-        cnt = np.zeros(base.size, dtype=np.int64)
-        np.add.at(cnt, inv, 1)
+        np.add.at(score, inv, np.concatenate([s for _, s in parts]))
+        s_cnt = np.zeros(base.size, dtype=np.int64)
+        np.add.at(s_cnt, inv, 1)
         msm = max(prog.bool_msm, 1)
-        keep = cnt >= msm
+    if msm > 0:
+        keep = s_cnt >= msm
         base, score = base[keep], score[keep]
-
-    for nd in neg:
-        if nd.size and base.size:
-            keep = ~np.isin(base, nd, assume_unique=True)
+    for c in prog.clauses:
+        if c.occur == "must_not" and base.size:
+            keep = ~np.isin(base, hits(c, base)[0], assume_unique=True)
             base, score = base[keep], score[keep]
     return base, score

@@ -342,140 +342,64 @@ def score_program_topk(
     """Conjunction-led top-k for a whole boolean program over one
     segment (the reference's lead-with-the-required-clause scorer,
     ``ConjunctionDISI`` + two-phase iteration): required clauses
-    intersect with skip-style block decode (later clauses and every
-    should / must_not clause decode ONLY candidate-overlapping blocks),
-    then exact scores accumulate on the surviving candidates in the
-    same association order as the exhaustive program scorer.
+    intersect sparsest first, each decoding only the posting blocks that
+    overlap the candidates so far; every should / must_not clause then
+    decodes ONLY candidate-overlapping blocks. Clause scoring and the
+    bool combine are the exhaustive program scorer's own
+    (msearch._clause_hits / msearch._combine), so results are exact.
 
     ``clauses``: [{occur, kind(match|phrase), terms, operator, msm,
-    weight}]. Returns None when there is no required clause (caller
-    falls back to the exhaustive path) — pure-should MaxScore is left
-    to the single-match WAND path."""
-    from opensearch_spark.search import bm25
+    weight[, slop]}]. Returns None when there is no required clause
+    (caller falls back to the exhaustive path) — pure-should MaxScore is
+    left to the single-match WAND path."""
+    from opensearch_spark.search import msearch as M
 
-    req = [c for c in clauses if c["occur"] in ("must", "filter")]
+    prog = M.Program(qid=0, clauses=[M._Clause(**c) for c in clauses],
+                     bool_msm=bool_msm, boost=boost)
+    req = [c for c in prog.clauses if c.occur in ("must", "filter")]
     if not req:
         return None
-    want_pos = any(c["kind"] == "phrase" for c in clauses)
-    all_terms = {t for c in clauses for t in c["terms"]}
+    want_pos = any(c.kind == "phrase" for c in prog.clauses)
     tb = build_term_blocks(
-        pdf, {t: idfs[t] for t in all_terms if t in idfs}, avgdl,
-        want_positions=want_pos,
+        pdf, {t: idfs[t] for c in prog.clauses for t in c.terms if t in idfs},
+        avgdl, want_positions=want_pos,
     )
-    total_blocks = sum(t.n_blocks for t in tb.values())
-    stats = {"decoded": 0, "total": total_blocks}
 
-    def done(docs, scores):
-        stats["decoded"] = sum(t.decoded_block_count() for t in tb.values())
-        return docs, scores, stats
-
-    def clause_decoded(c: dict, cand: Optional[np.ndarray]):
-        """term -> (docs, tfs, dl_q, pos_cat) restricted to candidate-
-        overlapping blocks (all blocks when cand is None)."""
-        out = {}
-        for t in c["terms"]:
-            if t not in tb:
-                continue
-            blocks = tb[t]
-            sel = (np.arange(blocks.n_blocks) if cand is None
-                   else blocks.blocks_overlapping(cand))
-            docs, tfs, dl_q, pos = blocks.decode(sel)
-            pos_cat = (np.concatenate(pos) if (want_pos and pos)
-                       else (np.empty(0, np.int64) if want_pos else None))
-            out[t] = (docs, tfs, dl_q, pos_cat)
-        return out
-
-    def clause_eval(c: dict, cand: Optional[np.ndarray]):
-        """(docs_sorted, scores) of the clause, restricted to ``cand``
-        when given. Score association order matches the exhaustive
-        scorer (sorted terms / phrase pseudo-term)."""
-        decoded = clause_decoded(c, cand)
-        if c["kind"] == "phrase":
-            docs, pf, dl_q = bm25.phrase_freq_in_segment(decoded, c["terms"])
-            idf_sum = sum(idfs[t] for t in c["terms"])
-            scores = idf_sum * (K1 + 1.0) * (
-                pf.astype(np.float64)
-                / (pf + K1 * (1.0 - B + B * dl_q / avgdl))
-            )
-        else:
-            docs, scores = bm25.score_terms_in_segment(
-                decoded, {t: idfs[t] for t in c["terms"]}, avgdl,
-                c["operator"], c["msm"], n_required=len(set(c["terms"])),
-            )
+    def hits(c, cand: Optional[np.ndarray]):
+        """The clause's hits from candidate-overlapping blocks only (all
+        blocks when cand is None), restricted to the candidates."""
+        decoded = {}
+        for t in c.terms:
+            if t in tb:
+                blocks = tb[t]
+                sel = (np.arange(blocks.n_blocks) if cand is None
+                       else blocks.blocks_overlapping(cand))
+                docs, tfs, dl_q, pos = blocks.decode(sel)
+                if want_pos:
+                    pos = np.concatenate(pos) if pos else np.empty(0, np.int64)
+                decoded[t] = (docs, tfs, dl_q, pos)
+        docs, scores = M._clause_hits(c, decoded, idfs, avgdl)
         if cand is not None and docs.size:
             keep = np.isin(docs, cand, assume_unique=True)
             docs, scores = docs[keep], scores[keep]
-        if c["occur"] == "filter":
-            scores = np.zeros_like(scores)
-        elif c["weight"] != 1.0:
-            scores = scores * c["weight"]
         return docs, scores
 
-    def est_size(c: dict) -> int:
-        sizes = [int(tb[t].n_docs.sum()) for t in c["terms"] if t in tb]
+    def est_size(c) -> int:
+        sizes = [int(tb[t].n_docs.sum()) for t in c.terms if t in tb]
         if not sizes:
             return 0
-        if c["kind"] == "phrase" or c["operator"] == "and":
+        if c.kind == "phrase" or c.operator == "and":
             return min(sizes)
         return sum(sizes)
 
-    # required-clause intersection, smallest first (skip decode)
-    order = sorted(range(len(req)), key=lambda i: est_size(req[i]))
-    cand: Optional[np.ndarray] = None
-    req_eval: Dict[int, Tuple[np.ndarray, np.ndarray]] = {}
-    for i in order:
-        docs, scores = clause_eval(req[i], cand)
-        if docs.size == 0:
-            return done(*_EMPTY)
-        req_eval[i] = (docs, scores)
-        cand = docs if cand is None else cand[np.isin(cand, docs, assume_unique=True)]
-        if cand.size == 0:
-            return done(*_EMPTY)
-
-    # exact accumulation on survivors, clause order = program order
-    # (same float association order as the exhaustive scorer)
-    score = np.zeros(cand.size, dtype=np.float64)
-    for i in range(len(req)):
-        docs, s = req_eval[i]
-        pos = np.searchsorted(docs, cand)
-        pos = np.clip(pos, 0, docs.size - 1)
-        m = docs[pos] == cand
-        if not m.all():
-            # clause evaluated against an earlier (larger) candidate set;
-            # every current candidate must still be present
-            cand, score = cand[m], score[m]
-            pos = pos[m]
-            m = np.ones(cand.size, dtype=bool)
-        score += s[pos]
-        if cand.size == 0:
-            return done(*_EMPTY)
-
-    sho = [c for c in clauses if c["occur"] == "should"]
-    s_cnt = np.zeros(cand.size, dtype=np.int64)
-    for c in sho:
-        docs, s = clause_eval(c, cand)
-        if docs.size == 0:
-            continue
-        hit = np.isin(cand, docs, assume_unique=True)
-        pos = np.searchsorted(docs, cand[hit])
-        score[hit] += s[pos]
-        s_cnt[hit] += 1
-    if bool_msm > 0 and sho:
-        keep = s_cnt >= bool_msm
-        cand, score = cand[keep], score[keep]
-
-    for c in clauses:
-        if c["occur"] != "must_not":
-            continue
-        docs, _s = clause_eval(c, cand)
-        if docs.size and cand.size:
-            keep = ~np.isin(cand, docs, assume_unique=True)
-            cand, score = cand[keep], score[keep]
-
+    lead = sorted(range(len(req)), key=lambda i: est_size(req[i]))
+    docs, score = M._combine(prog, hits, lead)
     if boost != 1.0:
         score = score * boost
-    docs, score = _topk_arrays(cand, score, k)
-    return done(docs, score)
+    docs, score = _topk_arrays(docs, score, k)
+    stats = {"decoded": sum(t.decoded_block_count() for t in tb.values()),
+             "total": sum(t.n_blocks for t in tb.values())}
+    return docs, score, stats
 
 
 def _score_or_pruned(

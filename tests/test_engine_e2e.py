@@ -281,7 +281,7 @@ def test_bool_program_path_rank_identity(setup):
     from opensearch_spark.search import dsl as dsl_mod
 
     node = dsl_mod.parse(dsl)
-    prog_df = engine._search_topk_program(node, 10)
+    prog_df = engine._program_frame(node, 10)
     assert prog_df is not None, "bool should compile to a program"
     got = run(engine, dsl, k=10)
     exhaustive = [

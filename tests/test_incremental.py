@@ -213,6 +213,33 @@ def test_update_by_query(spark, tmp_path):
     assert hit["hits"].collect()[0]["content"].startswith("zzzpatched ")
 
 
+def test_update_by_query_invalidates_engine_caches(spark, tmp_path):
+    """The engine passed to update_by_query forgets its plan cache and
+    all its cached term statistics (df map, IDFs, field statistics)."""
+    from opensearch_spark.index.build import build_index
+    from opensearch_spark.index.reindex import update_by_query
+    from opensearch_spark.search.engine import SearchEngine
+    from opensearch_spark.testing.corpus import generate_corpus
+
+    corpus = spark.createDataFrame(generate_corpus(80, seed=53))
+    out = str(tmp_path / "ubqcache")
+    build_index(spark, corpus, out, n_segments=2, shuffle_partitions=4)
+    eng = SearchEngine(spark, out, corpus=corpus)
+    q = {"match": {"content": "def"}}
+    eng.search(q, k=5).collect()
+    eng._field_statistics()
+    assert eng._plan_cache and eng._idf_cache and eng._term_df_map
+    assert eng._field_stats_cache is not None
+
+    res = update_by_query(spark, eng, out, q,
+                          {"content": "concat('zzzcache ', content)"})
+    assert res["updated"] > 0
+    assert eng._plan_cache == {}
+    assert eng._term_df_map is None
+    assert eng._idf_cache == {}
+    assert eng._field_stats_cache is None
+
+
 def test_update_by_query_ctx_op_routing(spark, tmp_path):
     """ctx.op in a painless update script routes rows: 'delete'
     tombstones, 'noop' keeps the original and re-indexes nothing,

@@ -3,10 +3,13 @@ search. Reference: `_msearch` executes each request with identical
 semantics to `_search` (TransportMultiSearchAction.java)."""
 
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from opensearch_spark.index.build import build_index
+from opensearch_spark.search import dsl as dsl_mod
 from opensearch_spark.search.engine import SearchEngine
+from opensearch_spark.testing import brute
 from opensearch_spark.testing.corpus import generate_corpus
 
 K = 10
@@ -127,16 +130,10 @@ def test_search_hot_query_plan_cache(eng):
         for f in glob.glob(_os.path.join(eng._deletes_dir, "*.parquet")):
             _os.remove(f)
         eng._load_deletes()
-        eng._search_plans.clear()
-        eng._msearch_plans.clear()
+        eng._plan_cache.clear()
 
 
 # ---- differential: every serving path against the brute oracle -------------
-
-from hypothesis import given, settings, strategies as st  # noqa: E402
-
-from opensearch_spark.search import dsl as dsl_mod  # noqa: E402
-from opensearch_spark.testing import brute  # noqa: E402
 
 _TERMS = ["def", "return", "import", "class", "self", "yield", "public",
           "static", "void", "data", "load", "parse", "zzz_not_a_term"]
@@ -235,3 +232,51 @@ def test_serving_paths_match_oracle(eng, brute_ix, queries):
         assert brute.rank_identical(_pairs(by_qid.get(qid, [])), want, 1e-6), q
         assert eng.count(q) == len(scores), q
 
+
+# ---- field routing: a leaf is scored against its own field's postings ------
+
+@pytest.fixture(scope="module")
+def two_field_index(spark, tmp_path_factory):
+    rows = [(0, "alpha beta shared gamma", "shared note"),
+            (1, "alpha plain text here", "other note"),
+            (2, "unrelated content words", "shared thing")]
+    corpus = spark.createDataFrame(rows, "doc_id long, text string, tag string")
+    root = tmp_path_factory.mktemp("fields")
+    dirs = {f: str(root / f) for f in ("text", "tag")}
+    for f, d in dirs.items():
+        build_index(spark, corpus, d, text_col=f, doc_id_col="doc_id",
+                    n_segments=2)
+    return corpus, rows, dirs
+
+
+TAG_BOOL = {"bool": {"must": [{"match": {"tag": "shared"}}],
+                     "should": [{"match": {"tag": "note"}}]}}
+
+
+def test_other_field_leaf_is_rejected_on_single_field_engine(spark, two_field_index):
+    corpus, _, dirs = two_field_index
+    eng = SearchEngine(spark, dirs["text"], corpus=corpus, text_field="text",
+                       doc_id_col="doc_id")
+    with pytest.raises(ValueError, match="non-indexed field 'tag'"):
+        eng.compile(dsl_mod.parse(TAG_BOOL))
+    with pytest.raises(ValueError, match="non-indexed field 'tag'"):
+        eng.search(TAG_BOOL, k=K).collect()
+    with pytest.raises(ValueError, match="non-indexed field 'tag'"):
+        eng.msearch([TAG_BOOL], k=K).collect()
+
+
+def test_other_field_leaf_is_routed_on_multi_field_engine(spark, two_field_index):
+    from opensearch_spark.search.engine import MultiFieldEngine
+
+    corpus, rows, dirs = two_field_index
+    eng = MultiFieldEngine(spark, dirs, corpus=corpus, doc_id_col="doc_id")
+    bix = brute.build_from_texts({d: tag for d, _, tag in rows})
+    want = brute.topk(brute.bool_query(
+        bix, must=[brute.match(bix, "shared")],
+        should=[brute.match(bix, "note")]), K)
+    assert [d for d, _ in want] == [0, 2]
+    assert brute.rank_identical(_pairs(eng.search(TAG_BOOL, k=K).collect()),
+                                want, 1e-6)
+    assert brute.rank_identical(
+        _pairs(eng.msearch([TAG_BOOL], k=K).collect()), want, 1e-6)
+    assert eng.count({"match": {"tag": "shared"}}) == 2
