@@ -127,10 +127,6 @@ EQUIV = [
                   "must_not": [{"match": {"content": "yield"}}]}},
     ),
     (
-        {"query_string": {"query": '"public void"~2', "default_field": "content"}},
-        {"match_phrase": {"content": {"query": "public void", "slop": 2}}},
-    ),
-    (
         {"simple_query_string": {"query": "class | yield", "fields": ["content"]}},
         {"bool": {"should": [{"match": {"content": "class"}},
                              {"match": {"content": "yield"}}],
@@ -140,6 +136,10 @@ EQUIV = [
         {"simple_query_string": {"query": "+class +import", "fields": ["content"]}},
         {"bool": {"must": [{"match": {"content": "class"}},
                            {"match": {"content": "import"}}]}},
+    ),
+    (
+        {"query_string": {"query": '"public void"~2', "default_field": "content"}},
+        {"match_phrase": {"content": {"query": "public void", "slop": 2}}},
     ),
 ]
 
