@@ -791,7 +791,7 @@ def _ft_analyze_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     segment tasks run), checked against the oracle's tok CTE — the
     analyzer contract certified directly instead of only through
     scores. First 50 docs keep the row count bounded."""
-    from opensearch_spark.analysis.analyzer import MAX_TOKEN_LENGTH, duckdb_tokens_expr
+    from opensearch_spark.analysis.analyzer import duckdb_tokens_expr
     import duckdb
     import pyarrow as pa
 

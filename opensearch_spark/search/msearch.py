@@ -46,8 +46,6 @@ from opensearch_spark.search import ast as A, bm25, wand
 
 MSEARCH_SCHEMA = "qid int, docId long, score double"
 
-_EMPTY = (np.empty(0, np.int64), np.empty(0, np.float64))
-
 
 @dataclass
 class _Clause:
@@ -69,9 +67,8 @@ class Program:
     match_none: bool = False
 
 
-def build_program(qid: int, node: A.AnyNode, known_terms, tok=tokenize,
-                  field_name: Optional[str] = None,
-                  phrases: bool = True) -> Optional[Program]:
+def build_program(qid: int, node: A.AnyNode, known_terms, tok,
+                  field_name: str, phrases: bool) -> Optional[Program]:
     """AST -> flat scoring program, or None if the node is not
     program-expressible (caller falls back to the general compiler):
     another node family, a nested compound, ``zero_terms_query: all``
@@ -87,7 +84,7 @@ def build_program(qid: int, node: A.AnyNode, known_terms, tok=tokenize,
     def leaf(n: A.AnyNode, occur: str) -> bool:
         if not isinstance(n, (A.Match, A.MatchPhrase)):
             return False
-        if field_name is not None and n.field_name != field_name:
+        if n.field_name != field_name:
             return False
         terms = tok(n.query)
         required = occur in ("must", "filter")
@@ -129,7 +126,12 @@ def build_program(qid: int, node: A.AnyNode, known_terms, tok=tokenize,
                       ("should", node.should), ("must_not", node.must_not)):
         if not all(leaf(c, occur) for c in cs):
             return None
-    prog.bool_msm = node.effective_msm()
+    # a bool without should clauses ignores minimum_should_match (as the
+    # union path does); one whose should clauses dropped out (missing
+    # terms) cannot reach it
+    prog.bool_msm = node.effective_msm() if node.should else 0
+    if prog.bool_msm > sum(c.occur == "should" for c in prog.clauses):
+        prog.match_none = True
     return prog
 
 
@@ -157,8 +159,8 @@ TermScore = Callable[[str, np.ndarray, np.ndarray], np.ndarray]
 
 
 def make_scorer(programs: List[Program], idfs: Dict[str, float],
-                avgdl: float, k: Optional[int] = None,
-                term_score: Optional[TermScore] = None):
+                avgdl: float, k: Optional[int],
+                term_score: Optional[TermScore]):
     """applyInPandas fn scoring every program against one segment's
     posting blocks; emits (qid, docId, score), per-program top-k when
     ``k`` is given. ``term_score(term, tf, dl_q)`` replaces the BM25
@@ -182,7 +184,7 @@ def make_scorer(programs: List[Program], idfs: Dict[str, float],
                 if p.boost != 1.0:
                     scores = scores * p.boost
                 parts.append((p.qid, docs, scores))
-        parts = parts or [(0, *_EMPTY)]
+        parts = parts or [(0, *wand._EMPTY)]
         return pd.DataFrame({
             "qid": np.concatenate([np.full(d.size, q, dtype=np.int32)
                                    for q, d, _ in parts]),
@@ -265,7 +267,7 @@ def _combine(prog: Program, hits, lead: Optional[Sequence[int]] = None
             d = got[i][0]
             base = d if base is None else base[np.isin(base, d, assume_unique=True)]
             if base.size == 0:
-                return _EMPTY
+                return wand._EMPTY
         score = np.zeros(base.size, dtype=np.float64)
         for i in range(len(req)):
             d, s = got[i]
@@ -280,7 +282,7 @@ def _combine(prog: Program, hits, lead: Optional[Sequence[int]] = None
     else:
         parts = [hits(c, None) for c in sho]
         if not parts:
-            return _EMPTY
+            return wand._EMPTY
         base, inv = np.unique(np.concatenate([d for d, _ in parts]),
                               return_inverse=True)
         score = np.zeros(base.size, dtype=np.float64)

@@ -3,7 +3,7 @@ search. Reference: `_msearch` executes each request with identical
 semantics to `_search` (TransportMultiSearchAction.java)."""
 
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from opensearch_spark.index.build import build_index
@@ -212,12 +212,7 @@ def _pairs(rows):
     return [(int(r["docId"]), float(r["score"])) for r in rows]
 
 
-@settings(max_examples=25, derandomize=True, deadline=None, database=None)
-@given(queries=st.lists(_query(), min_size=1, max_size=2))
-def test_serving_paths_match_oracle(eng, brute_ix, queries):
-    """search(k), compile() top-k, msearch per-qid rows and count() all
-    agree with the brute-force oracle on generated match / phrase / bool
-    queries (ties broken by docId, scores within 1e-6)."""
+def _check_serving_paths(eng, brute_ix, queries):
     by_qid = {}
     for r in eng.msearch(queries, k=K).collect():
         by_qid.setdefault(int(r["qid"]), []).append(r)
@@ -231,6 +226,33 @@ def test_serving_paths_match_oracle(eng, brute_ix, queries):
         assert brute.rank_identical(_pairs(top.collect()), want, 1e-6), q
         assert brute.rank_identical(_pairs(by_qid.get(qid, [])), want, 1e-6), q
         assert eng.count(q) == len(scores), q
+
+
+_DEF = {"match": {"content": {"query": "def", "boost": 1.0}}}
+_RETURN = {"match": {"content": {"query": "return", "boost": 1.0}}}
+_MISSING = {"match": {"content": {"query": "zzz_not_a_term", "boost": 1.0}}}
+
+
+@settings(max_examples=25, derandomize=True, deadline=None, database=None)
+@given(queries=st.lists(_query(), min_size=1, max_size=2))
+# minimum_should_match on a bool with no should clause is ignored
+@example(queries=[{"bool": {"must": [_DEF, _RETURN],
+                            "minimum_should_match": 1}}])
+def test_serving_paths_match_oracle(eng, brute_ix, queries):
+    """search(k), compile() top-k, msearch per-qid rows and count() all
+    agree with the brute-force oracle on generated match / phrase / bool
+    queries (ties broken by docId, scores within 1e-6)."""
+    _check_serving_paths(eng, brute_ix, queries)
+
+
+def test_should_clause_on_missing_term_counts_toward_msm(eng, brute_ix):
+    """A should clause whose terms are not in the index can never match,
+    but still counts toward minimum_should_match: the bool matches
+    nothing, on every serving path."""
+    q = {"bool": {"must": [_DEF], "should": [_MISSING],
+                  "minimum_should_match": 1}}
+    assert _oracle(brute_ix, q) == {}
+    _check_serving_paths(eng, brute_ix, [q])
 
 
 # ---- field routing: a leaf is scored against its own field's postings ------
